@@ -1,1 +1,45 @@
-"""Batch jobs (spark-submit entry points)."""
+"""Batch jobs (spark-submit entry points), and the pieces every job shares:
+the url-revisit keeper, the leg timer and the atomic manifest writer."""
+
+from __future__ import annotations
+
+import json
+import os
+import time
+
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
+
+
+def latest_per_url(df: DataFrame) -> DataFrame:
+    """One row per url.  A crawl legally re-fetches a url (WARC revisit
+    records), and downstream stages assume url is a key; the keeper is
+    the newest fetch (null `warc_ts` last), with the smaller
+    `extract_sha256` as the deterministic tiebreak."""
+    w = Window.partitionBy("url").orderBy(
+        F.col("warc_ts").desc_nulls_last(), "extract_sha256"
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def lap(legs: dict[str, float], name: str, since: float) -> float:
+    """Record `legs[name]` as the seconds since `since` and return now,
+    the start of the next leg."""
+    now = time.time()
+    legs[name] = round(now - since, 3)
+    return now
+
+
+def write_json_atomic(path: str, payload: dict) -> None:
+    """Write `payload` as JSON to `path` via a tmp file and `os.replace`:
+    a crash mid-dump leaves the previous file (or none), never torn
+    JSON.  A job's manifest is its commit point, so readers that test for
+    the file must only ever see a complete one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(payload, f, indent=1)
+    os.replace(tmp, path)

@@ -37,6 +37,8 @@ import time
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
+from lightly_ocr_spark.jobs import write_json_atomic
+
 DEFAULT_TARGET_BYTES = 128 << 20
 
 
@@ -156,8 +158,7 @@ def run_compact(
         "partition_by": partition_by,
         "wall_s": round(time.time() - t0, 3),
     }
-    with open(os.path.join(out_dir, "_compaction.json"), "w") as f:
-        json.dump(manifest, f, indent=1)
+    write_json_atomic(os.path.join(out_dir, "_compaction.json"), manifest)
     return manifest
 
 

@@ -73,15 +73,19 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lightly_ocr_spark.jobs import lap, latest_per_url
+# module global on purpose: the crash-window tests patch `_atomic_json` to
+# fail at each commit point
+from lightly_ocr_spark.jobs import write_json_atomic as _atomic_json
 from lightly_ocr_spark.operators.dedup import (
     incremental_exact_dedup,
     write_fingerprint_index,
 )
 from lightly_ocr_spark.operators.extract_udf import extract_pages
-from lightly_ocr_spark.schemas import PAGES_SCHEMA
+from lightly_ocr_spark.sources import PAGE_FORMATS, read_pages
 
 MANIFEST_DIR = "_manifests"
 MIN_TOKENS = 10
@@ -91,13 +95,6 @@ def _manifest_paths(out_dir: str, batch_id: str) -> tuple[str, str]:
     d = os.path.join(out_dir, MANIFEST_DIR)
     return (os.path.join(d, f"batch-{batch_id}.json"),
             os.path.join(d, f"batch-{batch_id}.fp.json"))
-
-
-def _atomic_json(path: str, payload: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f, indent=1)
-    os.replace(tmp, path)
 
 
 def process_pages_batch(
@@ -130,23 +127,9 @@ def process_pages_batch(
 
     t0 = time.time()
     legs: dict[str, float] = {}
-
-    def _leg(name: str, since: float) -> float:
-        legs[name] = round(time.time() - since, 3)
-        return time.time()
-
-    extracted = extract_pages(pages, keep_empty=False).select(
+    one_per_url = latest_per_url(extract_pages(pages, keep_empty=False).select(
         "url", "warc_ts", "text", "n_blocks", "extract_sha256"
-    )
-    # url-revisit dedup: a crawl legally re-fetches a url; keeper = newest
-    wu = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc_nulls_last(), "extract_sha256"
-    )
-    one_per_url = (
-        extracted.withColumn("_rn", F.row_number().over(wu))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    ))
     # intra-batch + cross-batch exact dedup; commit=False — THIS job owns
     # the append so it can gate it on the corpus commit.  The eager
     # localCheckpoint freezes the survivor rows: both the corpus write and
@@ -156,7 +139,7 @@ def process_pages_batch(
         spark, one_per_url, index_path, id_col="url", commit=False
     ).localCheckpoint(eager=True)
     n_unique = exact_survivors.count()
-    tl = _leg("extract_exact_dedup", t0)
+    tl = lap(legs, "extract_exact_dedup", t0)
 
     survivors = exact_survivors
     near_sigs = None
@@ -181,7 +164,7 @@ def process_pages_batch(
             commit=False, with_sigs=True, max_bucket=near_max_bucket,
         )
         n_near_unique = survivors.count()
-        tl = _leg("near_dedup", tl)
+        tl = lap(legs, "near_dedup", tl)
 
     if os.path.exists(mpath):
         # replaying the index-append phase only: the corpus commit already
@@ -217,7 +200,7 @@ def process_pages_batch(
         )
         batch_out = os.path.join(out_dir, f"batch={batch_id}")
         gated.write.mode("overwrite").parquet(batch_out)
-        tl = _leg("corpus_write", tl)
+        tl = lap(legs, "corpus_write", tl)
         m = obs.get
         manifest = {
             "batch": batch_id,
@@ -243,12 +226,12 @@ def process_pages_batch(
         from lightly_ocr_spark.operators.dedup import write_minhash_index
 
         write_minhash_index(near_sigs, near_index_path, mode="append")
-        tl = _leg("near_index_append", tl)
+        tl = lap(legs, "near_index_append", tl)
     write_fingerprint_index(
         exact_survivors, index_path, id_col="url", text_col="text",
         mode="append",
     )
-    _leg("fp_index_append", tl)
+    lap(legs, "fp_index_append", tl)
     # the marker records the batch's COMMITTED fingerprint count (the
     # manifest's n_unique): on an index-append replay the recomputed
     # n_unique is only the rows still missing (legally 0 after a crash
@@ -261,18 +244,6 @@ def process_pages_batch(
     # the legs it actually ran)
     manifest["legs"] = legs
     return manifest
-
-
-def _read_batch(spark: SparkSession, path: str, input_format: str):
-    if input_format == "warc":
-        from lightly_ocr_spark.sources.warc import warc_pages
-
-        return warc_pages(spark, path)
-    if input_format == "jsonl":
-        from lightly_ocr_spark.sources.jsonl import read_jsonl_pages
-
-        return read_jsonl_pages(spark, path)
-    return spark.read.schema(PAGES_SCHEMA).parquet(path)
 
 
 def run_crawl_batch(
@@ -291,7 +262,7 @@ def run_crawl_batch(
     becomes a new batch."""
     if batch_id is None:
         batch_id = os.path.basename(os.path.normpath(input_path))
-    pages = _read_batch(spark, input_path, input_format)
+    pages = read_pages(spark, input_path, input_format)
     return process_pages_batch(
         spark, pages, out_dir, index_path, batch_id, min_tokens=min_tokens,
         input_desc=f"{input_format}:{os.path.abspath(input_path)}",
@@ -367,7 +338,7 @@ def main() -> None:
                     help="fingerprint index directory (created on first "
                     "batch, appended thereafter)")
     ap.add_argument("--batch-id", default=None)
-    ap.add_argument("--format", choices=("pages", "warc", "jsonl"),
+    ap.add_argument("--format", choices=tuple(PAGE_FORMATS),
                     default="pages")
     ap.add_argument("--min-tokens", type=int, default=MIN_TOKENS)
     ap.add_argument("--near-index", default=None,

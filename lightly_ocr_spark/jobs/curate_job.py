@@ -28,6 +28,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lightly_ocr_spark.jobs import lap, latest_per_url, write_json_atomic
 from lightly_ocr_spark.operators.dedup import (
     MINHASH_BANDS as BANDS,
     MINHASH_K,
@@ -35,7 +36,7 @@ from lightly_ocr_spark.operators.dedup import (
 )
 from lightly_ocr_spark.operators.enrich import enrich_pages
 from lightly_ocr_spark.operators.extract_udf import extract_pages
-from lightly_ocr_spark.schemas import PAGES_SCHEMA
+from lightly_ocr_spark.sources import PAGE_FORMATS, read_pages
 
 MIN_TOKENS = 10
 NEAR_DUP_MIN_AGREEMENT = 0.5
@@ -184,17 +185,9 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     obs_in = Observation("curate-input")
     obs_ex = Observation("curate-extracted")
     obs_cur = Observation("curate-out")
-    if input_format == "warc":
-        from lightly_ocr_spark.sources.warc import warc_pages
-
-        raw_pages = warc_pages(spark, pages_path)
-    elif input_format == "jsonl":
-        from lightly_ocr_spark.sources.jsonl import read_jsonl_pages
-
-        raw_pages = read_jsonl_pages(spark, pages_path)
-    else:
-        raw_pages = spark.read.schema(PAGES_SCHEMA).parquet(pages_path)
-    pages = raw_pages.observe(obs_in, F.count(F.lit(1)).alias("n"))
+    pages = read_pages(spark, pages_path, input_format).observe(
+        obs_in, F.count(F.lit(1)).alias("n")
+    )
 
     extracted = extract_pages(pages, keep_empty=False).select(
         "url", "warc_ts", "text", "n_blocks", "extract_sha256"
@@ -202,19 +195,10 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
 
     from pyspark import StorageLevel
 
-    # url-revisit dedup FIRST: a crawl legally re-fetches the same url
-    # (WARC revisit records); downstream stages assume url is a key —
-    # duplicate urls would merge minhash tokens into one bogus signature
-    # and multiply rows through the enrichment join.  Keeper = newest
-    # fetch (warc_ts desc), content hash as the deterministic tiebreak.
-    wu = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc_nulls_last(), "extract_sha256"
-    )
-    one_per_url = (
-        extracted.withColumn("rn", F.row_number().over(wu))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    # url-revisit dedup FIRST: duplicate urls would merge minhash tokens
+    # into one bogus signature and multiply rows through the enrichment
+    # join
+    one_per_url = latest_per_url(extracted)
 
     # exact dedup: keeper = min(url) per content hash (one shuffle)
     w = Window.partitionBy("extract_sha256").orderBy("url")
@@ -230,15 +214,13 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     n_unique = uniq.count()
     n_extracted = int(obs_ex.get["n"])
     legs: dict[str, float] = {}
-    tl = time.time()
-    legs["extract_exact_dedup"] = round(tl - t0, 3)
+    tl = lap(legs, "extract_exact_dedup", t0)
 
     drops = near_dup_drops(
         uniq.select("url", "text"), checkpoint_dir=checkpoint_dir,
         max_bucket=near_max_bucket,
     )
-    legs["near_dup_components"] = round(time.time() - tl, 3)
-    tl = time.time()
+    tl = lap(legs, "near_dup_components", tl)
     deduped = uniq.join(drops, "url", "left_anti")
 
     if passage_dedup is not None:
@@ -395,8 +377,7 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         frame.unpersist()
     # passage dedup / host cap / gates / enrichment / NB / PII all ride
     # this one fused write action — the leg wall covers them jointly
-    legs["gates_enrich_write"] = round(time.time() - tl, 3)
-    tl = time.time()
+    tl = lap(legs, "gates_enrich_write", tl)
 
     n_chunks = None
     if chunk is not None:
@@ -435,8 +416,7 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
             os.path.join(out_dir, "chunks")
         )
         n_chunks = int(obs_chunks.get["n"])
-        legs["chunks_shuffle_write"] = round(time.time() - tl, 3)
-        tl = time.time()
+        tl = lap(legs, "chunks_shuffle_write", tl)
         if pack_budget is not None:
             # sequence packing of the just-written chunks into
             # fixed-budget training sequences (packs/ holds the
@@ -464,7 +444,7 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
                 os.path.join(out_dir, "packs")
             )
             n_packs = int(obs_packs.get["n_packs"] or 0)
-            legs["packs_write"] = round(time.time() - tl, 3)
+            lap(legs, "packs_write", tl)
 
     manifest = {
         "legs": legs,
@@ -501,8 +481,7 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
         if pack_budget is not None:
             manifest["pack_budget"] = pack_budget
             manifest["n_packs"] = n_packs
-    with open(os.path.join(out_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1)
+    write_json_atomic(os.path.join(out_dir, "manifest.json"), manifest)
     uniq.unpersist()
     return manifest
 
@@ -516,7 +495,7 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--host-cap", type=int, default=None,
                     help="keep at most K docs per host (off by default)")
-    ap.add_argument("--format", choices=("pages", "warc", "jsonl"),
+    ap.add_argument("--format", choices=tuple(PAGE_FORMATS),
                     default="pages",
                     help="input layout: pages parquet, raw WARC archives, "
                     "or JSONL(.gz) dumps")

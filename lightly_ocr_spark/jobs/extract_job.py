@@ -38,28 +38,11 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from lightly_ocr_spark.jobs import write_json_atomic
 from lightly_ocr_spark.operators.extract_udf import extract_pages
-from lightly_ocr_spark.schemas import PAGES_SCHEMA
+from lightly_ocr_spark.sources import PAGE_FORMATS, page_files, read_pages
 
 MANIFEST_DIR = "_manifests"
-
-
-_FORMAT_GLOBS = {
-    "pages": "*.parquet",
-    "warc": "*.warc*",
-    "jsonl": "*.jsonl*",
-}
-
-
-def _input_files(pages_path: str, input_format: str = "pages") -> list[str]:
-    pattern = _FORMAT_GLOBS[input_format]
-    if os.path.isdir(pages_path):
-        files = sorted(glob.glob(os.path.join(pages_path, pattern)))
-    else:
-        files = [pages_path]
-    if not files:
-        raise FileNotFoundError(f"no {pattern} files under {pages_path}")
-    return files
 
 
 def _slice_files(files: list[str], n_slices: int) -> list[list[str]]:
@@ -85,8 +68,8 @@ def run_extract(
     boundary, write commit — overlap instead of serializing.  Commit
     semantics are unchanged: each slice's manifest is written only after its
     own parquet write succeeds."""
+    slices = _slice_files(page_files(pages_path, input_format), n_slices)
     os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
-    slices = _slice_files(_input_files(pages_path, input_format), n_slices)
     if salt_partitions is None:
         salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if salt is None:
@@ -127,17 +110,7 @@ def run_extract(
                 )
             return None
         t0 = time.time()
-        if input_format == "warc":
-            # CC front door: archives -> pages rows, file-parallel explode
-            from lightly_ocr_spark.sources.warc import warc_pages
-
-            pages = warc_pages(spark, files)
-        elif input_format == "jsonl":
-            from lightly_ocr_spark.sources.jsonl import read_jsonl_pages
-
-            pages = read_jsonl_pages(spark, files)
-        else:
-            pages = spark.read.schema(PAGES_SCHEMA).parquet(*files)
+        pages = read_pages(spark, files, input_format)
         # skew salting: spread any hot host across all partitions
         # (north_rule).  Extraction itself is row-local (input splits are
         # byte-uniform), so --no-salt skips the shuffle when no downstream
@@ -181,10 +154,7 @@ def run_extract(
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         # commit point: manifest written only after the parquet write succeeds
-        tmp = manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, manifest_path)
+        write_json_atomic(manifest_path, manifest)
         return m["rows_out"]
 
     with ThreadPoolExecutor(max_workers=max(1, concurrent_slices)) as pool:
@@ -215,11 +185,8 @@ def rollup_manifests(out_dir: str) -> dict:
         total["empty_docs"] += m["empty_docs"]
         total["checksum"] = (total["checksum"] + m["checksum"]) % (1 << 63)
         total["input_files"] += m["input_files"]
-    out = os.path.join(out_dir, MANIFEST_DIR, "_rollup.json")
-    tmp = out + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(total, f, indent=1)
-    os.replace(tmp, out)
+    write_json_atomic(os.path.join(out_dir, MANIFEST_DIR, "_rollup.json"),
+                      total)
     return total
 
 
@@ -232,9 +199,9 @@ def verify_extracted(
 ) -> dict:
     """Golden check (J1/J2 + A2): every url present exactly once, text
     byte-identical to the pages.text golden column."""
-    golden = spark.read.schema(PAGES_SCHEMA).parquet(
-        *_input_files(pages_path)
-    ).select("url", F.col("text").alias("golden_text"))
+    golden = read_pages(spark, page_files(pages_path)).select(
+        "url", F.col("text").alias("golden_text")
+    )
     got = read_extracted(spark, out_dir).select("url", "text")
     joined = got.join(golden, "url", "inner")
     stats = joined.agg(
@@ -267,7 +234,7 @@ def main() -> None:
     ap.add_argument("--no-salt", action="store_true",
                     help="alias for --salt off (back-compat)")
     ap.add_argument("--verify", action="store_true")
-    ap.add_argument("--format", choices=("pages", "warc", "jsonl"),
+    ap.add_argument("--format", choices=tuple(PAGE_FORMATS),
                     default="pages",
                     help="input layout: pages parquet, raw WARC archives, "
                     "or JSONL(.gz) dumps")

@@ -10,12 +10,11 @@ Python row loops):
 * minhash   — k independent min-hashes (xxhash64 salted per seed) banded
               into LSH buckets; candidate pairs only ever materialize within
               a bucket, which is the scale path for 10^12 docs.
-* simhash   — 64-bit sign-vote fingerprint; near-dups differ in few bits.
+* simhash   — 64-bit sign-vote fingerprint over md5 token bits; near-dups
+              differ in few bits.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -25,7 +24,6 @@ from lightly_ocr_spark.plans.relational import load, spread
 
 MINHASH_K = 32          # signature length
 MINHASH_BANDS = 8       # 8 bands x 4 rows
-SIM_BITS = 64
 
 
 def lower_words(text_col="text") -> F.Column:
@@ -190,14 +188,10 @@ def minhash_signatures(
     return toks.groupBy("doc_id").agg(*aggs)
 
 
-def band_buckets(
-    sig: DataFrame, k: int = MINHASH_K, bands: int = MINHASH_BANDS
-) -> DataFrame:
+def _stack_bands(sig: DataFrame, k: int, bands: int, band_hash) -> DataFrame:
     """Signature frame (doc_id, mh0..mh{k-1}) -> stacked LSH bucket rows
-    (doc_id, band, bh): rows-per-band split, per-band xxhash64, one
-    explode.  The single shared banding projection — candidate-pair
-    generation, the curation pipeline, and the persisted near-dup index
-    all derive buckets from here so the bucket layout cannot drift."""
+    (doc_id, band, bh): rows-per-band split, `band_hash(b, band_cols)`
+    per band, one explode."""
     if k % bands:
         raise ValueError(
             f"k={k} not divisible by bands={bands}: the trailing "
@@ -205,23 +199,30 @@ def band_buckets(
             "into any bucket, weakening recall"
         )
     rows_per_band = k // bands
-    band_cols = [
-        F.xxhash64(
-            F.lit(b),
-            *[F.col(f"mh{b * rows_per_band + j}") for j in range(rows_per_band)],
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    banded = sig.select("doc_id", *band_cols)
-    return banded.select(
+    return sig.select(
         "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("bh"))
-                for b in range(bands)
-            ])
-        ).alias("e"),
+        F.explode(F.array(*[
+            F.struct(
+                F.lit(b).alias("band"),
+                band_hash(b, [F.col(f"mh{b * rows_per_band + j}")
+                              for j in range(rows_per_band)]).alias("bh"),
+            )
+            for b in range(bands)
+        ])).alias("e"),
     ).select("doc_id", "e.band", "e.bh")
+
+
+def band_buckets(
+    sig: DataFrame, k: int = MINHASH_K, bands: int = MINHASH_BANDS
+) -> DataFrame:
+    """Signature frame (doc_id, mh0..mh{k-1}) -> stacked LSH bucket rows
+    (doc_id, band, bh) with a per-band xxhash64.  The single shared
+    banding projection — candidate-pair generation, the curation
+    pipeline, and the persisted near-dup index all derive buckets from
+    here so the bucket layout cannot drift."""
+    return _stack_bands(
+        sig, k, bands, lambda b, cols: F.xxhash64(F.lit(b), *cols)
+    )
 
 
 def cap_buckets(stacked: DataFrame, max_bucket: int | None) -> DataFrame:
@@ -300,28 +301,32 @@ def band_candidate_pairs(
     )
 
 
+def _doubled_docs(spark: SparkSession, sf: str, max_id: int) -> DataFrame:
+    """documents(doc_id < max_id) plus a copy of doc_id < 50 under
+    doc_id + 1_000_000, so true duplicate pairs exist."""
+    d = spread(load(spark, sf, "documents").select("doc_id", "text").filter(
+        F.col("doc_id") < max_id
+    ))
+    return d.unionByName(
+        d.filter(F.col("doc_id") < 50).select(
+            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
+        )
+    )
+
+
 def minhash_pairs(
     spark: SparkSession, sf: str,
     k: int = MINHASH_K, bands: int = MINHASH_BANDS,
     max_id: int = 500,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: band-hash bucket join, pairs within
-    buckets only (the 10^12-scale dedup path).  Input doubled on doc_id<50
-    so true duplicate pairs exist.
+    buckets only (the 10^12-scale dedup path), over `_doubled_docs`.
 
     `max_id` bounds the candidate universe: the synthetic documents share a
     tiny vocabulary, so nearly every pair is a true near-dup and the pair
     count grows quadratically with corpus size — a data property, not an
     LSH failure (bucket join still never materializes cross-bucket pairs)."""
-    d = spread(load(spark, sf, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") < max_id
-    ))
-    doubled = d.unionByName(
-        d.filter(F.col("doc_id") < 50).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-        )
-    )
-    sig = minhash_signatures(doubled, k)
+    sig = minhash_signatures(_doubled_docs(spark, sf, max_id), k)
     return band_candidate_pairs(sig, k, bands)
 
 
@@ -336,63 +341,19 @@ def minhash_pairs_md5(
     band minima — every step exact integer/string math DuckDB
     reproduces verbatim, so this query is fully oracle-checkable.  The
     xxhash64 operator pipeline stays the engine fast path (one cheap
-    hash per (seed, token) vs an md5 here); candidate-pair semantics
-    are identical (same banding, same bucket-join shape)."""
-    d = spread(load(spark, sf, "documents").select("doc_id", "text").filter(
-        F.col("doc_id") < max_id
-    ))
-    doubled = d.unionByName(
-        d.filter(F.col("doc_id") < 50).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-        )
-    )
-    toks = _tokens(doubled)
-    mh = toks.groupBy("doc_id").agg(*[
+    hash per (seed, token) vs an md5 here); input, banding and the
+    bucket join are shared, only the two hash expressions differ."""
+    mh = _tokens(_doubled_docs(spark, sf, max_id)).groupBy("doc_id").agg(*[
         F.min(F.conv(F.substring(
             F.md5(F.concat_ws(":", F.lit(str(i)), F.col("tok"))), 1, 15
         ), 16, 10).cast("long")).alias(f"mh{i}")
         for i in range(k)
     ])
-    rows_per_band = k // bands
-    stacked = mh.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws(",", *[
-                    F.col(f"mh{b * rows_per_band + j}").cast("string")
-                    for j in range(rows_per_band)
-                ])).alias("bh"),
-            )
-            for b in range(bands)
-        ])).alias("e"),
-    ).select("doc_id", "e.band", "e.bh")
-    return _pairs_from_stacked(stacked)
-
-
-def simhash(df: DataFrame) -> DataFrame:
-    """doc_id -> 64-bit SimHash: per-bit sign votes over token hashes."""
-    toks = _tokens(df).withColumn("h", F.xxhash64("tok"))
-    votes = [
-        F.sum(
-            (F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) * 2 - 1)
-        ).alias(f"v{i}")
-        for i in range(SIM_BITS)
-    ]
-    per_doc = toks.groupBy("doc_id").agg(*votes)
-    bit_terms = [
-        F.when(F.col(f"v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i))
-        .otherwise(F.lit(0).cast("long"))
-        for i in range(SIM_BITS)
-    ]
-    return per_doc.select(
-        "doc_id", reduce(lambda a, b: a.bitwiseOR(b), bit_terms).alias("simhash")
-    )
-
-
-def simhash_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
-    return simhash(spread(load(spark, sf, "documents")
-                          .select("doc_id", "text")))
+    return _pairs_from_stacked(_stack_bands(
+        mh, k, bands,
+        lambda b, cols: F.md5(F.concat_ws(",", *[c.cast("string")
+                                                  for c in cols])),
+    ))
 
 
 def simhash_md5(df: DataFrame) -> DataFrame:
@@ -401,12 +362,9 @@ def simhash_md5(df: DataFrame) -> DataFrame:
     sign votes of md5-digit j's four bits (bit b of digit j = vote of
     token md5 digit j bit b; >0 -> 1, else 0).
 
-    Same locality semantics as `simhash` (xxhash64 bits are uniform and so
-    are md5 bits) but every step — md5, hex-digit extraction, bit shifts,
-    vote sums — is exact integer math DuckDB reproduces verbatim, so the
-    driver gate gets a full value-hash row instead of rows-only evidence.
-    The xxhash64 variant stays the engine fast path (one hash vs sixteen
-    digit extractions per token)."""
+    Every step — md5, hex-digit extraction, bit shifts, vote sums — is
+    exact integer math DuckDB reproduces verbatim, so the driver gate gets
+    a full value-hash row instead of rows-only evidence."""
     toks = _tokens(df).select("doc_id", F.md5("tok").alias("m"))
     digs = toks.select(
         "doc_id",
@@ -441,8 +399,8 @@ def simhash_md5(df: DataFrame) -> DataFrame:
 
 
 def simhash_md5_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
-    """Driver query: portable-bit SimHash over the documents table (the
-    oracled twin of `simhash_fingerprints`).  Scan `spread` (round 6):
+    """Driver query: portable-bit SimHash over the documents table.
+    Scan `spread` (round 6):
     sixteen digit extractions per token are per-row heavy and the
     single-row-group scan otherwise runs them on one core."""
     return simhash_md5(spread(load(spark, sf, "documents")

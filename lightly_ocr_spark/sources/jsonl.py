@@ -22,7 +22,7 @@ from lightly_ocr_spark.schemas import PAGES_SCHEMA
 
 
 def read_jsonl_pages(
-    spark: SparkSession, path: str,
+    spark: SparkSession, path: str | list[str],
     url_field: str = "url", ts_field: str = "timestamp",
     html_field: str = "html", text_field: str = "text",
     lang_field: str = "lang",

@@ -14,6 +14,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lightly_ocr_spark.jobs import write_json_atomic
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.schemas import PAGES_SCHEMA
 
@@ -82,11 +83,10 @@ def extract_stream_job(
         path = _os.path.join(out_dir, f"epoch={epoch_id}")
         df.write.mode("overwrite").parquet(path)
         n = spark.read.parquet(path).count()
-        manifest = {"epoch": int(epoch_id), "rows": int(n)}
-        tmp = _os.path.join(manifests_dir, f"epoch-{epoch_id}.json.tmp")
-        with open(tmp, "w") as f:
-            _json.dump(manifest, f)
-        _os.replace(tmp, tmp[:-4])
+        write_json_atomic(
+            _os.path.join(manifests_dir, f"epoch-{epoch_id}.json"),
+            {"epoch": int(epoch_id), "rows": int(n)},
+        )
 
     q = (
         extracted.writeStream.foreachBatch(write_epoch)

@@ -434,16 +434,16 @@ class TestHostCapPlan:
 
 class TestSimHash:
     def test_simhash_deterministic_and_discriminative(self, spark, docs):
-        from lightly_ocr_spark.operators.dedup import simhash
+        from lightly_ocr_spark.operators.dedup import simhash_md5
 
         d = docs.select("doc_id", "text").filter(F.col("doc_id") < 30)
-        h1 = {r["doc_id"]: r["simhash"] for r in simhash(d).collect()}
-        h2 = {r["doc_id"]: r["simhash"] for r in simhash(d).collect()}
+        h1 = {r["doc_id"]: r["simhash_hex"] for r in simhash_md5(d).collect()}
+        h2 = {r["doc_id"]: r["simhash_hex"] for r in simhash_md5(d).collect()}
         assert h1 == h2  # deterministic
         assert len(set(h1.values())) > 25  # distinct docs -> distinct hashes
 
     def test_near_dup_small_hamming(self, spark, docs):
-        from lightly_ocr_spark.operators.dedup import simhash
+        from lightly_ocr_spark.operators.dedup import simhash_md5
 
         base = docs.filter(F.col("doc_id") == 1).first()["text"]
         words = base.split()
@@ -453,7 +453,8 @@ class TestSimHash:
         pdf = spark.createDataFrame(
             [(1, base), (2, near), (3, far)], "doc_id long, text string"
         )
-        h = {r["doc_id"]: r["simhash"] for r in simhash(pdf).collect()}
+        h = {r["doc_id"]: int(r["simhash_hex"], 16)
+             for r in simhash_md5(pdf).collect()}
 
         def ham(a, b):
             return bin((a ^ b) & ((1 << 64) - 1)).count("1")
