@@ -1,5 +1,6 @@
 """Batch jobs (spark-submit entry points), and the pieces every job shares:
-the url-revisit keeper, the leg timer and the atomic manifest writer."""
+the url-revisit keeper, the token gate, the leg timer and the atomic
+manifest writer."""
 
 from __future__ import annotations
 
@@ -9,6 +10,9 @@ import time
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# quality gate: a kept document has at least this many whitespace tokens
+MIN_TOKENS = 10
 
 
 def latest_per_url(df: DataFrame) -> DataFrame:
@@ -24,6 +28,14 @@ def latest_per_url(df: DataFrame) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+def n_tokens() -> F.Column:
+    """Whitespace token count of the `text` column; empty tokens (so an
+    empty text) count 0."""
+    return F.size(F.filter(
+        F.split(F.trim("text"), r"\s+"), lambda x: F.length(x) > 0
+    ))
 
 
 def lap(legs: dict[str, float], name: str, since: float) -> float:

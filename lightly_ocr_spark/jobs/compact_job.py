@@ -33,6 +33,7 @@ import json
 import os
 import shutil
 import time
+from urllib.parse import urlparse
 
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
@@ -53,7 +54,16 @@ def _data_files(path: str) -> list[str]:
 def recover_interrupted_swap(out_dir: str) -> bool:
     """If a previous run crashed between the two swap renames (out_dir
     missing, backup present), restore the original dataset.  Returns True
-    when a restore happened."""
+    when a restore happened.
+
+    Local filesystem only: a path with a URI scheme (`s3a://...`,
+    `file:/...`) raises `ValueError` — `os.path` would never see its
+    backup, so recovery would be silently skipped."""
+    if urlparse(out_dir).scheme:
+        raise ValueError(
+            f"{out_dir!r}: swap recovery works on local filesystem paths "
+            "only; pass a plain local path, not a URI"
+        )
     backup = out_dir.rstrip("/") + ".replaced"
     if not os.path.exists(out_dir) and os.path.exists(backup):
         os.rename(backup, out_dir)
@@ -75,7 +85,8 @@ def run_compact(
     one task) and writes with the same partitionBy, so every partition
     dir collapses to one file.  `in_dir == out_dir` is supported — the
     dataset is fully materialized into `.inprogress` before the swap
-    touches the original."""
+    touches the original.  Local filesystem only: an `in_dir` or
+    `out_dir` with a URI scheme raises `ValueError`."""
     if shuffle and partition_by:
         raise ValueError(
             "--shuffle and --partition-by are mutually exclusive: the "

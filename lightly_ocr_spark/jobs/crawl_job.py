@@ -76,19 +76,20 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lightly_ocr_spark.jobs import lap, latest_per_url
+from lightly_ocr_spark.jobs import MIN_TOKENS, lap, latest_per_url, n_tokens
 # module global on purpose: the crash-window tests patch `_atomic_json` to
 # fail at each commit point
 from lightly_ocr_spark.jobs import write_json_atomic as _atomic_json
 from lightly_ocr_spark.operators.dedup import (
     incremental_exact_dedup,
+    incremental_near_dedup,
     write_fingerprint_index,
+    write_minhash_index,
 )
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.sources import PAGE_FORMATS, read_pages
 
 MANIFEST_DIR = "_manifests"
-MIN_TOKENS = 10
 
 
 def _manifest_paths(out_dir: str, batch_id: str) -> tuple[str, str]:
@@ -157,8 +158,6 @@ def process_pages_batch(
         # The EXACT index still records every exact-novel fingerprint
         # (near-dropped included): future byte-identical copies of a
         # near-dropped doc stop at the cheap exact stage.
-        from lightly_ocr_spark.operators.dedup import incremental_near_dedup
-
         survivors, near_sigs = incremental_near_dedup(
             spark, exact_survivors, near_index_path, id_col="url",
             commit=False, with_sigs=True, max_bucket=near_max_bucket,
@@ -186,14 +185,11 @@ def process_pages_batch(
             )
         manifest = committed
     else:
-        tokens = F.size(F.filter(
-            F.split(F.trim("text"), r"\s+"), lambda x: F.length(x) > 0
-        ))
         from pyspark.sql import Observation
 
         obs = Observation(f"crawl-{batch_id}-{int(t0)}")
         gated = (
-            survivors.withColumn("n_tokens", tokens.cast("long"))
+            survivors.withColumn("n_tokens", n_tokens().cast("long"))
             .filter(F.col("n_tokens") >= min_tokens)
             .observe(obs, F.count(F.lit(1)).alias("n"),
                      F.sum(F.length("text")).alias("chars"))
@@ -223,9 +219,7 @@ def process_pages_batch(
     # replay after a completed append computes zero rows and the append
     # degenerates to a no-op.  NEAR before EXACT (see comment above).
     if near_sigs is not None:
-        from lightly_ocr_spark.operators.dedup import write_minhash_index
-
-        write_minhash_index(near_sigs, near_index_path, mode="append")
+        write_minhash_index(near_sigs, near_index_path)
         tl = lap(legs, "near_index_append", tl)
     write_fingerprint_index(
         exact_survivors, index_path, id_col="url", text_col="text",

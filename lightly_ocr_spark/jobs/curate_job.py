@@ -8,9 +8,10 @@ generator->filter->dataset ETL plane, `ocr/tools/generator.py` +
     extract (fused UDF)           # stage 1+2 of the engine
     -> drop empty                 # F7 validity
     -> exact dedup                # sha256 groups, keeper = min(url)
-    -> near dedup (MinHash-LSH)   # banded buckets; drop the larger url of
-                                  # any candidate pair with >=50% signature
-                                  # agreement
+    -> near dedup (MinHash-LSH)   # banded candidates verified at >=50%
+                                  # signature agreement, clustered by
+                                  # connected components; each cluster
+                                  # keeps its smallest url
     -> quality gate               # >= MIN_TOKENS whitespace tokens
     -> write + stage-count manifest
 
@@ -28,79 +29,24 @@ import time
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lightly_ocr_spark.jobs import lap, latest_per_url, write_json_atomic
-from lightly_ocr_spark.operators.dedup import (
-    MINHASH_BANDS as BANDS,
-    MINHASH_K,
+from lightly_ocr_spark.jobs import (
+    MIN_TOKENS,
+    lap,
+    latest_per_url,
+    n_tokens,
+    write_json_atomic,
+)
+# NEAR_DUP_MIN_AGREEMENT is re-exported: perfbench/layers.py imports it
+# from this module
+from lightly_ocr_spark.operators.dedup import (  # noqa: F401
+    NEAR_DUP_MIN_AGREEMENT,
+    NEAR_DUP_NGRAM,
     minhash_signatures,
+    near_dup_drops,
 )
 from lightly_ocr_spark.operators.enrich import enrich_pages
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.sources import PAGE_FORMATS, read_pages
-
-MIN_TOKENS = 10
-NEAR_DUP_MIN_AGREEMENT = 0.5
-# MINHASH_K / BANDS imported from operators.dedup — single source of truth
-
-
-def near_dup_drops(
-    texts: DataFrame, checkpoint_dir: str | None = None,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """(url, text) -> urls to drop: verified near-dup pairs (signature
-    agreement >= NEAR_DUP_MIN_AGREEMENT of the k min-hashes) are clustered
-    with connected components, and every url except each cluster's
-    lexicographic minimum loses.  Per-pair "drop the larger" under-drops
-    transitive chains (in A~B~C with only those edges, B and C both beat A
-    pairwise but C can survive B's removal); component keepers make
-    exactly one survivor per cluster.  Banding math is the shared
-    `band_candidate_pairs` — one implementation for the dd_minhash query
-    and this pipeline."""
-    from pyspark import StorageLevel
-
-    from lightly_ocr_spark.operators.dedup import band_candidate_pairs
-
-    sig = minhash_signatures(
-        texts.select(F.col("url").alias("doc_id"), "text"),
-        k=MINHASH_K,
-        ngram=3,  # order-sensitive shingles: shared vocabulary != near-dup
-    ).persist(StorageLevel.DISK_ONLY)
-    # persist is load-bearing: the signature pipeline (24M-shingle explode
-    # x k hashes at 200k docs — measured 125s) feeds THREE consumers
-    # (banding, and both sides of the agreement verification join); without
-    # it the verified-pairs plan and the components checkpoint each re-run
-    # the whole subtree (measured: near-dedup leg 550s -> ~150s at 200k)
-    cand = band_candidate_pairs(
-        sig, MINHASH_K, BANDS, max_bucket=max_bucket
-    ).select(
-        F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    )
-    sa = sig.alias("sa")
-    sb = sig.alias("sb")
-    agree = sum(
-        (F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}")).cast("int")
-        for i in range(MINHASH_K)
-    )
-    verified = (
-        cand.join(sa, F.col("a") == F.col("sa.doc_id"))
-        .join(sb, F.col("b") == F.col("sb.doc_id"))
-        .filter(agree >= int(NEAR_DUP_MIN_AGREEMENT * MINHASH_K))
-    )
-    from lightly_ocr_spark.operators.dedup import connected_components
-
-    pairs = verified.select(
-        F.col("a").alias("id_a"), F.col("b").alias("id_b")
-    ).distinct()
-    # nodes default = edge endpoints; checkpoint_dir makes the iterative
-    # rounds durably checkpointed (cluster jobs), else localCheckpoint
-    comp = connected_components(pairs, checkpoint_dir=checkpoint_dir)
-    # comp is materialized (checkpointed) by connected_components, so the
-    # signature cache has served all its consumers — release the disk
-    sig.unpersist()
-    return (
-        comp.filter(F.col("id") != F.col("component"))
-        .select(F.col("id").alias("url"))
-    )
 
 
 def media_features_per_url(media: DataFrame) -> DataFrame:
@@ -216,10 +162,19 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     legs: dict[str, float] = {}
     tl = lap(legs, "extract_exact_dedup", t0)
 
+    sig = minhash_signatures(
+        uniq.select(F.col("url").alias("doc_id"), "text"),
+        ngram=NEAR_DUP_NGRAM,
+    ).persist(StorageLevel.DISK_ONLY)
+    # persist is load-bearing: the signature pipeline (24M-shingle explode
+    # x k hashes at 200k docs — measured 125s) feeds THREE consumers
+    # (banding, and both sides of the agreement verification join); without
+    # it the verified-pairs plan and the components checkpoint each re-run
+    # the whole subtree (measured: near-dedup leg 550s -> ~150s at 200k)
     drops = near_dup_drops(
-        uniq.select("url", "text"), checkpoint_dir=checkpoint_dir,
-        max_bucket=near_max_bucket,
-    )
+        sig, checkpoint_dir=checkpoint_dir, max_bucket=near_max_bucket,
+    ).withColumnRenamed("doc_id", "url")
+    sig.unpersist()
     tl = lap(legs, "near_dup_components", tl)
     deduped = uniq.join(drops, "url", "left_anti")
 
@@ -274,13 +229,12 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     # quality gate BEFORE enrichment: no Arrow crossing is spent on rows
     # the token filter drops, and persisting the gated frame means the
     # anti-join/host-cap plan runs once, not once per join branch
-    tokens = F.size(F.split(F.trim("text"), r"\s+"))
     # persist is load-bearing: gated feeds BOTH sides of the final join
     # (the enrichment Arrow stage reads it, and the join's other side is
     # gated itself) — unpersisted, each side would recompute the
     # anti-join/host-cap subtree (near-dup MinHash included)
     gated = (
-        deduped.withColumn("n_tokens", tokens.cast("long"))
+        deduped.withColumn("n_tokens", n_tokens().cast("long"))
         .filter(F.col("n_tokens") >= MIN_TOKENS)
     ).persist(StorageLevel.DISK_ONLY)
     to_unpersist = [gated]

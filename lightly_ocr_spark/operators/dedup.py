@@ -20,10 +20,16 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lightly_ocr_spark.jobs.compact_job import recover_interrupted_swap
 from lightly_ocr_spark.plans.relational import load, spread
 
 MINHASH_K = 32          # signature length
 MINHASH_BANDS = 8       # 8 bands x 4 rows
+# near-dup rule shared by curate and the crawl near index: order-sensitive
+# word 3-gram shingles (shared vocabulary != near-dup), and a verified
+# pair agrees on at least half of the k min-hashes
+NEAR_DUP_NGRAM = 3
+NEAR_DUP_MIN_AGREEMENT = 0.5
 
 
 def lower_words(text_col="text") -> F.Column:
@@ -574,6 +580,48 @@ def connected_components(
     return labels
 
 
+def _signatures_agree() -> F.Column:
+    """The near-dup verify predicate over two signature frames aliased
+    `sa` and `sb`: at least NEAR_DUP_MIN_AGREEMENT of the MINHASH_K
+    min-hashes are equal."""
+    agree = sum(
+        (F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}")).cast("int")
+        for i in range(MINHASH_K)
+    )
+    return agree >= int(NEAR_DUP_MIN_AGREEMENT * MINHASH_K)
+
+
+def near_dup_drops(
+    sig: DataFrame, checkpoint_dir: str | None = None,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Signature frame (doc_id, mh0..mh{k-1}) -> the `doc_id`s to drop.
+
+    Band candidates (`band_candidate_pairs`, `max_bucket` skipping hot
+    buckets) are verified by signature agreement, clustered with
+    `connected_components`, and every id except each cluster's smallest
+    loses.  Per-pair "drop the larger" under-drops transitive chains (in
+    A~B~C with only those edges, C can survive B's removal); component
+    keepers make exactly one survivor per cluster.  `sig` feeds banding
+    and both sides of the verify join, so callers persist it; the result
+    is materialized (components are checkpointed), so the caller may
+    unpersist `sig` as soon as this returns."""
+    verified = (
+        band_candidate_pairs(sig, max_bucket=max_bucket)
+        .join(sig.alias("sa"), F.col("id_a") == F.col("sa.doc_id"))
+        .join(sig.alias("sb"), F.col("id_b") == F.col("sb.doc_id"))
+        .filter(_signatures_agree())
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    # checkpoint_dir makes the iterative rounds durably checkpointed
+    # (cluster jobs), else localCheckpoint
+    comp = connected_components(verified, checkpoint_dir=checkpoint_dir)
+    return comp.filter(F.col("id") != F.col("component")).select(
+        F.col("id").alias("doc_id")
+    )
+
+
 def dup_components(
     spark: SparkSession, sf: str, ngram: int = 13, max_id: int = 150
 ) -> DataFrame:
@@ -693,6 +741,25 @@ def line_dedup(spark: SparkSession, sf: str, min_docs: int = 5) -> DataFrame:
     return line_dedup_docs(lined, min_docs=min_docs)
 
 
+def _read_index(spark: SparkSession, path: str) -> DataFrame | None:
+    """Recover an interrupted compaction swap of `path`, then read the
+    index dataset there; None when there is none yet (first batch).
+    Recovery comes first: a crash between the swap's two renames leaves
+    the dataset at `<path>.replaced`, which would read as "first batch"
+    (re-admitting every cross-batch duplicate) while the next append
+    strands the backup forever.  Only PATH_NOT_FOUND means "first
+    batch": a corrupt footer, permission or IO error propagates, or dedup
+    would silently degrade to intra-batch and a commit would break the
+    index's one-row-per-content invariant."""
+    recover_interrupted_swap(path)
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" not in f"{e.getCondition()} {e}":
+            raise
+        return None
+
+
 def write_fingerprint_index(
     docs: DataFrame, path: str, id_col: str = "doc_id",
     text_col: str = "text", mode: str = "overwrite",
@@ -715,12 +782,10 @@ def write_fingerprint_index(
     swap renames would otherwise recreate `<path>` and permanently
     strand the `.replaced` backup, silently shrinking the fingerprint
     corpus.  (In the crawl flow `incremental_exact_dedup` recovers first
-    in the same batch, which only masked the hazard.)"""
+    in the same batch, which only masked the hazard.)  Local filesystem
+    only: appending to a path with a URI scheme raises `ValueError` (see
+    `recover_interrupted_swap`)."""
     if mode == "append":
-        from lightly_ocr_spark.jobs.compact_job import (
-            recover_interrupted_swap,
-        )
-
         recover_interrupted_swap(path)
     docs.select(
         F.sha2(F.col(text_col), 256).alias("fp"),
@@ -747,37 +812,19 @@ def incremental_exact_dedup(
     `fp` (pass-through, so job pipelines keep their metadata).  At 10^12
     docs the index is itself big — but it is hash-partitioned, compact
     (one 64-hex row per doc), and this plan reads it once per batch
-    instead of re-fingerprinting the corpus."""
+    instead of re-fingerprinting the corpus.  Local filesystem only: an
+    `index_path` with a URI scheme raises `ValueError` (see
+    `recover_interrupted_swap`)."""
     batch = new_batch.withColumn("fp", F.sha2(F.col(text_col), 256))
     w = Window.partitionBy("fp").orderBy(id_col)
-    intra = (
+    fresh = (
         batch.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    # a compaction of the index (crawl_job's documented cadence) that
-    # crashed between its two swap renames leaves the whole corpus
-    # fingerprint set at <path>.replaced and nothing at <path> — restore
-    # it, or the PATH_NOT_FOUND fallback below would silently re-admit
-    # every cross-batch duplicate AND strand the old index forever (the
-    # append below recreates <path>, making later recovery a no-op)
-    from lightly_ocr_spark.jobs.compact_job import recover_interrupted_swap
-
-    recover_interrupted_swap(index_path)
-    try:
-        index = spark.read.parquet(index_path).select("fp")
-        fresh = intra.join(index, "fp", "left_anti")
-    except AnalysisException as e:
-        # first batch: no index at the path yet — everything is novel.
-        # Only PATH_NOT_FOUND-class failures mean "first batch"; a corrupt
-        # footer / permission / IO error must propagate, or cross-batch
-        # dedup silently degrades to intra-batch and (commit=True) appends
-        # duplicate fingerprints that break the index's one-row-per-content
-        # invariant.
-        cond = e.getCondition() or ""
-        if "PATH_NOT_FOUND" not in cond and "PATH_NOT_FOUND" not in str(e):
-            raise
-        fresh = intra
+    index = _read_index(spark, index_path)
+    if index is not None:
+        fresh = fresh.join(index.select("fp"), "fp", "left_anti")
     if commit:
         # break lineage BEFORE appending: Spark recaches (recomputes) any
         # cached plan that reads a path being written, so a mere persist
@@ -792,12 +839,9 @@ def incremental_exact_dedup(
     return fresh
 
 
-def write_minhash_index(
-    sigs: DataFrame, path: str, mode: str = "overwrite",
-    k: int = MINHASH_K, bands: int = MINHASH_BANDS,
-) -> None:
-    """Materialize the corpus NEAR-dup index from a signature frame
-    (doc_id, mh0..mh{k-1}): two datasets under `path` —
+def write_minhash_index(sigs: DataFrame, path: str) -> None:
+    """Append a signature frame (doc_id, mh0..mh{k-1}) to the corpus
+    NEAR-dup index: two datasets under `path` —
 
       sigs/     one row per doc (the verification surface; joined only
                 for candidates, by doc_id)
@@ -814,7 +858,7 @@ def write_minhash_index(
     and the next batch's candidate scan paid a 4096-task stage (measured:
     bucket join 5.1s -> ~1s, append 14s -> ~4s at 50k docs).
 
-    `mode='append'` is how a batch commits its survivors' signatures —
+    An append is how a batch commits its survivors' signatures —
     IDEMPOTENT BY CONSTRUCTION: already-indexed doc_ids are anti-joined
     out against the existing sigs/ dataset before anything is written,
     so a crash-replay that recomputes the same survivor set appends
@@ -835,87 +879,37 @@ def write_minhash_index(
     instead make the replay skip the doc with its buckets missing —
     permanently unmatchable.
 
-    `mode='overwrite'` (an index REBUILD) is atomic: both datasets are
-    fully written under `<path>.inprogress` and swapped in with the
-    compact_job rename pair, so no crash window leaves new sigs next to
-    stale buckets (where candidate hits would inner-join to missing
-    signatures and near-dup matches silently vanish).  A crash between
-    the two renames leaves the old index at `<path>.replaced`; readers
-    and the next write restore it via `recover_interrupted_swap`."""
-    import os
-    import shutil
-
-    from lightly_ocr_spark.jobs.compact_job import recover_interrupted_swap
-
-    if mode not in ("overwrite", "append"):
-        raise ValueError(
-            f"write_minhash_index supports mode='overwrite' (atomic "
-            f"rebuild) or 'append' (idempotent commit), got {mode!r}"
-        )
-
-    def _buckets(frame: DataFrame) -> DataFrame:
-        return (
-            band_buckets(frame, k, bands)
-            .withColumn("bh_prefix", F.pmod("bh", F.lit(16)).cast("int"))
-            .repartition("band", "bh_prefix")
-        )
-
-    if mode == "overwrite":
-        tmp = path.rstrip("/") + ".inprogress"
-        shutil.rmtree(tmp, ignore_errors=True)
-        sigs.write.mode("overwrite").parquet(f"{tmp}/sigs")
-        _buckets(sigs).write.mode("overwrite").partitionBy(
-            "band", "bh_prefix"
-        ).parquet(f"{tmp}/buckets")
-        recover_interrupted_swap(path)
-        if os.path.exists(path):
-            backup = path.rstrip("/") + ".replaced"
-            shutil.rmtree(backup, ignore_errors=True)
-            os.rename(path, backup)
-            os.rename(tmp, path)
-            shutil.rmtree(backup, ignore_errors=True)
-        else:
-            os.rename(tmp, path)
-        return
-    # append: restore any interrupted sub-dataset compaction, filter to
-    # genuinely-new doc_ids, then BUCKETS first, SIGS second (docstring)
-    recover_interrupted_swap(f"{path}/sigs")
+    Both sub-datasets first recover an interrupted compaction swap.
+    Local filesystem only: a `path` with a URI scheme raises
+    `ValueError` (see `recover_interrupted_swap`)."""
     recover_interrupted_swap(f"{path}/buckets")
-    new_sigs = sigs
-    try:
-        existing = sigs.sparkSession.read.parquet(f"{path}/sigs").select(
-            "doc_id"
-        )
+    existing = _read_index(sigs.sparkSession, f"{path}/sigs")
+    if existing is not None:
         # the anti-join plan reads path/sigs, which the write below
         # updates — break lineage first or the write recaches the plan
         # and re-evaluates it against the post-append state
-        new_sigs = sigs.join(existing, "doc_id", "left_anti") \
+        sigs = sigs.join(existing.select("doc_id"), "doc_id", "left_anti") \
             .localCheckpoint(eager=True)
-    except AnalysisException as e:
-        cond = e.getCondition() or ""
-        if "PATH_NOT_FOUND" not in cond and "PATH_NOT_FOUND" not in str(e):
-            raise
-        # first append: the path does not exist yet
-    _buckets(new_sigs).write.mode("append").partitionBy(
+    band_buckets(sigs).withColumn(
+        "bh_prefix", F.pmod("bh", F.lit(16)).cast("int")
+    ).repartition("band", "bh_prefix").write.mode("append").partitionBy(
         "band", "bh_prefix"
     ).parquet(f"{path}/buckets")
-    new_sigs.write.mode("append").parquet(f"{path}/sigs")
+    sigs.write.mode("append").parquet(f"{path}/sigs")
 
 
 def incremental_near_dedup(
     spark: SparkSession, new_batch: DataFrame, index_path: str,
-    id_col: str = "doc_id", text_col: str = "text",
-    k: int = MINHASH_K, bands: int = MINHASH_BANDS, ngram: int = 3,
-    min_agreement: float = 0.5, commit: bool = True,
-    checkpoint_dir: str | None = None,
+    id_col: str = "doc_id", commit: bool = True,
     with_sigs: bool = False,
     max_bucket: int | None = None,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Near-dedup a NEW crawl batch against the persisted minhash index,
-    then (commit=True) append the survivors' signatures so the next batch
-    sees them — the MinHash-LSH twin of `incremental_exact_dedup`, and
-    the missing piece of a continuous-crawl loop (exact dedup alone lets
-    trivially-mutated boilerplate re-enter the corpus every batch).
+    """Near-dedup a NEW crawl batch (`id_col`, `text`, ...) against the
+    persisted minhash index, then (commit=True) append the survivors'
+    signatures so the next batch sees them — the MinHash-LSH twin of
+    `incremental_exact_dedup`, and the missing piece of a continuous-crawl
+    loop (exact dedup alone lets trivially-mutated boilerplate re-enter
+    the corpus every batch).
 
     Plan, none of it rescanning corpus text:
       1. batch signatures (one groupBy) — persisted: they feed candidate
@@ -923,14 +917,13 @@ def incremental_near_dedup(
       2. CROSS candidates: batch buckets equi-join the index's bucket
          dataset on (band, bh) — uniform hash keys, candidates bounded by
          bucket collisions, never all-pairs;
-      3. verify candidates by full-signature agreement (>= min_agreement
-         of k minhashes) joining batch sigs with ONLY the candidate
+      3. verify candidates by signature agreement (the same rule as
+         `near_dup_drops`) joining batch sigs with ONLY the candidate
          corpus sigs; any verified match drops the batch doc (the corpus
          copy is the cluster keeper);
-      4. INTRA-batch near-dedup among the remainder: the shared
-         band_candidate_pairs -> agreement verify -> connected components
-         -> keep each cluster's min id (transitive chains collapse to one
-         survivor, same semantics as the curation pipeline);
+      4. INTRA-batch near-dedup among the remainder with `near_dup_drops`
+         (transitive chains collapse to one survivor, the min id — the
+         same clusterer as the curation pipeline);
       5. append survivors' sigs+buckets (idempotent on replay: the
          append itself anti-joins already-indexed doc_ids — see
          `write_minhash_index`; self-match in step 3 cannot be relied on
@@ -942,132 +935,71 @@ def incremental_near_dedup(
     append themselves (crawl_job) never recompute the signature
     aggregation.  Dropped near-dups' signatures are NOT indexed — each
     cluster is represented by its keeper, exactly like the batch curation
-    pipeline."""
+    pipeline.  Local filesystem only: an `index_path` with a URI scheme
+    raises `ValueError` (see `recover_interrupted_swap`)."""
     from pyspark import StorageLevel
 
-    batch = new_batch.withColumnRenamed(id_col, "doc_id") \
-        if id_col != "doc_id" else new_batch
+    batch = new_batch.withColumnRenamed(id_col, "doc_id")
     sig_b = minhash_signatures(
-        batch.select("doc_id", F.col(text_col).alias("text")),
-        k=k, ngram=ngram,
+        batch.select("doc_id", "text"), ngram=NEAR_DUP_NGRAM
     ).persist(StorageLevel.MEMORY_AND_DISK)
+    sig_rem = sig_b
     try:
-        return _near_dedup_core(
-            spark, batch, sig_b, index_path, id_col, k, bands, need=int(
-                min_agreement * k),
-            commit=commit, checkpoint_dir=checkpoint_dir,
-            with_sigs=with_sigs, max_bucket=max_bucket,
-        )
-    finally:
-        # release the signature cache even on failure (a raised corrupt-
-        # index read must not leak a persisted corpus-scale frame)
-        sig_b.unpersist()
-
-
-def _near_dedup_core(
-    spark, batch, sig_b, index_path, id_col, k, bands, need,
-    commit, checkpoint_dir, with_sigs, max_bucket=None,
-):
-    """Body of `incremental_near_dedup` (split out so the signature
-    cache's persist/unpersist pairs in a try/finally)."""
-    from pyspark import StorageLevel
-    agree = sum(
-        (F.col(f"sa.mh{i}") == F.col(f"sb.mh{i}")).cast("int")
-        for i in range(k)
-    )
-
-    # a rebuild (overwrite) crash between the swap renames leaves the old
-    # index at <path>.replaced and nothing at <path> — restore it, or the
-    # PATH_NOT_FOUND fallback below would silently treat a populated
-    # corpus as "first batch".  The SUB-datasets get the same treatment:
-    # the documented compaction cadence swaps sigs/ and buckets/
-    # individually, and a crashed buckets/ compaction would otherwise
-    # make every indexed doc unmatchable (candidates need bucket rows)
-    # while the next commit recreates buckets/ and strands the backup
-    # forever.  A sub-dataset missing WITHOUT a .replaced backup is the
-    # append-crash window, which stays replay-safe by redundancy (see
-    # write_minhash_index).
-    from lightly_ocr_spark.jobs.compact_job import recover_interrupted_swap
-
-    recover_interrupted_swap(index_path)
-    recover_interrupted_swap(f"{index_path}/sigs")
-    recover_interrupted_swap(f"{index_path}/buckets")
-    cross_drops = None
-    try:
-        idx_sigs = spark.read.parquet(f"{index_path}/sigs").select(
-            F.col("doc_id").alias("corpus_id"),
-            *[F.col(f"mh{i}") for i in range(k)],
-        )
-        idx_buckets = spark.read.parquet(f"{index_path}/buckets").select(
-            F.col("doc_id").alias("corpus_id"), "band", "bh"
-        )
-        # the cap applies to BOTH sides: a degenerate band hash grows a
-        # mega-bucket on the index side too, and the cross equi-join on
-        # it would be |batch-bucket| x |index-bucket|.  The index-side
-        # size test runs over ONLY the buckets the batch touches (the
-        # restricting join keeps each touched bucket's full membership,
-        # so the test is exact) — capping the whole index would add a
-        # full-index aggregate per batch that grows with the corpus.
-        bb = cap_buckets(band_buckets(sig_b, k, bands), max_bucket)
-        if max_bucket is None:
-            idx_side = idx_buckets
-        else:
-            idx_side = cap_buckets(
-                idx_buckets.join(
-                    bb.select("band", "bh").distinct(), ["band", "bh"]
-                ),
-                max_bucket,
+        # the index path and BOTH sub-datasets recover an interrupted
+        # swap before reading: the compaction cadence swaps sigs/ and
+        # buckets/ individually, and a crashed buckets/ compaction would
+        # otherwise make every indexed doc unmatchable (candidates need
+        # bucket rows) while the next commit strands the backup.  A
+        # sub-dataset missing WITHOUT a backup is the append-crash
+        # window, replay-safe by redundancy (see write_minhash_index).
+        recover_interrupted_swap(index_path)
+        idx_sigs = _read_index(spark, f"{index_path}/sigs")
+        idx_buckets = _read_index(spark, f"{index_path}/buckets")
+        cross_drops = None
+        if idx_sigs is not None and idx_buckets is not None:
+            # the cap applies to BOTH sides: a degenerate band hash grows
+            # a mega-bucket on the index side too, and the cross equi-join
+            # on it would be |batch-bucket| x |index-bucket|.  The
+            # index-side size test runs over ONLY the buckets the batch
+            # touches (the restricting join keeps each touched bucket's
+            # full membership, so the test is exact) — capping the whole
+            # index would add a full-index aggregate per batch that grows
+            # with the corpus.
+            idx_buckets = idx_buckets.select(
+                F.col("doc_id").alias("corpus_id"), "band", "bh"
             )
-        cand = (
-            bb.join(idx_side, ["band", "bh"])
-            .select("doc_id", "corpus_id")
-            .distinct()
-        )
-        cross_drops = (
-            cand.join(sig_b.alias("sa"), "doc_id")
-            .join(idx_sigs.alias("sb"), "corpus_id")
-            .filter(agree >= need)
-            .select("doc_id")
-            .distinct()
-        )
-    except AnalysisException as e:
-        cond = e.getCondition() or ""
-        if "PATH_NOT_FOUND" not in cond and "PATH_NOT_FOUND" not in str(e):
-            raise
-        # first batch: no index yet
-
-    # cross_drops embeds the bucket + verification joins against the
-    # GROWING index, and it feeds THREE consumers (the survivor
-    # anti-join, and sig_rem's every evaluation) — eagerly checkpoint the
-    # (tiny: verified drop ids only) frame, or each consumer re-runs the
-    # index joins and per-batch wall grows with corpus size (measured:
-    # near leg 12 -> 19.5s over four 50k batches; flat ~10s after)
-    if cross_drops is not None:
-        cross_drops = cross_drops.localCheckpoint(eager=True)
-    sig_rem = (
-        sig_b.join(cross_drops, "doc_id", "left_anti")
-        if cross_drops is not None else sig_b
-    )
-    # sig_rem feeds five consumers (pair self-join x2, verify join x2,
-    # survivor sigs) — persist for the duration of this call
-    sig_rem = sig_rem.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # intra-batch: candidate pairs -> verified pairs -> components
-        pairs = band_candidate_pairs(sig_rem, k, bands,
-                                     max_bucket=max_bucket)
-        verified = (
-            pairs.join(
-                sig_rem.alias("sa"), F.col("id_a") == F.col("sa.doc_id")
-            )
-            .join(sig_rem.alias("sb"), F.col("id_b") == F.col("sb.doc_id"))
-            .filter(agree >= need)
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        comp = connected_components(verified, checkpoint_dir=checkpoint_dir)
-        intra_drops = comp.filter(F.col("id") != F.col("component")).select(
-            F.col("id").alias("doc_id")
-        )
+            bb = cap_buckets(band_buckets(sig_b), max_bucket)
+            if max_bucket is not None:
+                idx_buckets = cap_buckets(
+                    idx_buckets.join(
+                        bb.select("band", "bh").distinct(), ["band", "bh"]
+                    ),
+                    max_bucket,
+                )
+            # cross_drops embeds the bucket + verification joins against
+            # the GROWING index, and it feeds THREE consumers (the
+            # survivor anti-join, and sig_rem's every evaluation) —
+            # eagerly checkpoint the (tiny: verified drop ids only) frame,
+            # or each consumer re-runs the index joins and per-batch wall
+            # grows with corpus size (measured: near leg 12 -> 19.5s over
+            # four 50k batches; flat ~10s after)
+            cross_drops = (
+                bb.join(idx_buckets, ["band", "bh"])
+                .select("doc_id", "corpus_id")
+                .distinct()
+                .join(sig_b.alias("sa"), "doc_id")
+                .join(idx_sigs.withColumnRenamed("doc_id", "corpus_id")
+                      .alias("sb"), "corpus_id")
+                .filter(_signatures_agree())
+                .select("doc_id")
+                .distinct()
+            ).localCheckpoint(eager=True)
+            # sig_rem feeds five consumers (pair self-join x2, verify
+            # join x2, survivor sigs) — persist for the duration of this
+            # call
+            sig_rem = sig_b.join(cross_drops, "doc_id", "left_anti") \
+                .persist(StorageLevel.MEMORY_AND_DISK)
+        intra_drops = near_dup_drops(sig_rem, max_bucket=max_bucket)
         # anti-joins, not a semi-join against sig_rem: a doc with no tokens
         # has no signature at all — it cannot near-dup anything and must
         # SURVIVE, not silently vanish with the dropped set
@@ -1089,12 +1021,13 @@ def _near_dedup_core(
             .localCheckpoint(eager=True)
         )
     finally:
+        # release the signature caches even on failure (a raised corrupt-
+        # index read must not leak a persisted corpus-scale frame)
         sig_rem.unpersist()
+        sig_b.unpersist()
     if commit:
-        write_minhash_index(survivor_sigs, index_path, mode="append",
-                            k=k, bands=bands)
-    if id_col != "doc_id":
-        survivors = survivors.withColumnRenamed("doc_id", id_col)
+        write_minhash_index(survivor_sigs, index_path)
+    survivors = survivors.withColumnRenamed("doc_id", id_col)
     if with_sigs:
         return survivors, survivor_sigs
     return survivors

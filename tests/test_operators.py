@@ -1284,13 +1284,13 @@ class TestMinhashIndexAppendIdempotence:
         )
         sigs1 = minhash_signatures(d1, ngram=3).localCheckpoint(eager=True)
         idx = str(tmp_path / "idx")
-        write_minhash_index(sigs1, idx, mode="append")
+        write_minhash_index(sigs1, idx)
         n_sigs = spark.read.parquet(f"{idx}/sigs").count()
         n_buck = spark.read.parquet(f"{idx}/buckets").count()
         assert n_sigs == 5
 
         # crash-replay: identical append is a complete no-op
-        write_minhash_index(sigs1, idx, mode="append")
+        write_minhash_index(sigs1, idx)
         assert spark.read.parquet(f"{idx}/sigs").count() == n_sigs
         assert spark.read.parquet(f"{idx}/buckets").count() == n_buck
 
@@ -1301,7 +1301,7 @@ class TestMinhashIndexAppendIdempotence:
             "doc_id string, text string",
         )
         sigs2 = minhash_signatures(d2, ngram=3).localCheckpoint(eager=True)
-        write_minhash_index(sigs2, idx, mode="append")
+        write_minhash_index(sigs2, idx)
         sigs = spark.read.parquet(f"{idx}/sigs")
         assert sigs.count() == 6  # only d9 appended
         assert sigs.groupBy("doc_id").count().filter(
