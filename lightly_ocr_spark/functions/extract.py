@@ -13,9 +13,11 @@ CRNN.process, chained in `pipeline.py:65-87`), recast for webtext:
   product of member-block densities (`net.py:190`).
 
 The kernel is *batch-at-a-time*: `extract_batch` consumes a pandas Series of
-html byte strings (one Arrow record batch) and returns a pandas DataFrame —
-the contract of a vectorized pandas UDF.  Per-document work happens in
-compiled-regex scans (C speed); there is no per-row Python in the Spark plan.
+page payloads (one Arrow record batch), routes each row by magic — `%PDF-`
+payloads to `functions.pdf`, the rest through the HTML pipeline — and
+returns a pandas DataFrame, the contract of a vectorized pandas UDF.
+Per-document work happens in compiled-regex scans (C speed); there is no
+per-row Python in the Spark plan.
 
 Spec constants live in `lightly_ocr_spark.contract`; an independent
 step-by-step implementation of the same spec lives in
@@ -58,6 +60,7 @@ from lightly_ocr_spark.contract import (
     decode_page_bytes,
     segment_score,
 )
+from lightly_ocr_spark.functions.pdf import PDF_MAGIC, extract_pdf_text
 
 __all__ = ["Block", "Span", "ExtractResult", "tokenize_blocks", "extract_text", "extract_batch"]
 
@@ -81,7 +84,7 @@ class Block(NamedTuple):
 
 @dataclass(frozen=True)
 class Span:
-    start: int  # original decoded-string coords (after D9 remap)
+    start: int  # HTML: decoded-string coords (D9 remap); PDF: output text
     end: int
     score: float
 
@@ -91,9 +94,6 @@ class ExtractResult:
     text: str
     spans: tuple[Span, ...]
     n_blocks: int
-    # D8 analog, populated only when extract_text(..., subspans=True):
-    # per segment, sentence (start, end) offsets into that segment's text
-    sentence_spans: tuple[tuple[tuple[int, int], ...], ...] = ()
 
 
 def _normalize_block_text(raw: str) -> str:
@@ -296,30 +296,6 @@ def _segments(blocks: list[Block]) -> list[tuple[list[int], float]]:
     return out
 
 
-# D8 analog (OPTIONAL, default off — the reference ships enablePoly=False,
-# `ocr/net.py:50`): sentence-level sub-spans inside a segment's stitched
-# text.  Boundaries after [.!?] or CJK fullwidth stops when followed by
-# whitespace/newline; offsets index the segment text (the "polygon" refines
-# the box, it does not change it).
-_SENTENCE_RE = re.compile(r"[^.!?。！？\n]*(?:[.!?。！？]+|\n|$)\s*", re.DOTALL)
-
-
-def split_sentences(text: str) -> list[tuple[int, int]]:
-    """(start, end) char spans of sentences; concatenation of the slices
-    reproduces `text` exactly (lossless partition)."""
-    spans: list[tuple[int, int]] = []
-    pos = 0
-    n = len(text)
-    while pos < n:
-        m = _SENTENCE_RE.match(text, pos)
-        if m is None or m.end() == pos:  # safety: always advance
-            spans.append((pos, n))
-            break
-        spans.append((pos, m.end()))
-        pos = m.end()
-    return spans
-
-
 def _collapse_dup_lines(lines: list[str]) -> list[str]:
     """R6: CTC-collapse analog — drop consecutive duplicate lines."""
     out: list[str] = []
@@ -331,12 +307,8 @@ def _collapse_dup_lines(lines: list[str]) -> list[str]:
     return out
 
 
-def extract_text(raw_html: bytes | None, subspans: bool = False) -> ExtractResult:
-    """Full fused pipeline for one document (engine path).
-
-    `subspans=False` mirrors the reference's `enablePoly=False` default
-    (`net.py:50`): sentence refinement is opt-in and never alters text/spans.
-    """
+def extract_text(raw_html: bytes | None) -> ExtractResult:
+    """Full fused pipeline for one document (engine path)."""
     decoded = decode_page_bytes(raw_html)
     canon, removals = canonicalize_newlines(decoded)
     blocks = tokenize_blocks(canon)
@@ -357,16 +329,28 @@ def extract_text(raw_html: bytes | None, subspans: bool = False) -> ExtractResul
         o_start = c_start + bisect_right(removals, c_start)
         o_end = c_end + bisect_right(removals, c_end - 1)
         spans.append(Span(o_start, o_end, score))
-    sent: tuple[tuple[tuple[int, int], ...], ...] = ()
-    if subspans:
-        sent = tuple(tuple(split_sentences(t)) for t in texts)
-    return ExtractResult(
-        SEGMENT_SEP.join(texts), tuple(spans), len(blocks), sent
-    )
+    return ExtractResult(SEGMENT_SEP.join(texts), tuple(spans), len(blocks))
+
+
+def _pdf_result(payload: bytes) -> ExtractResult:
+    """A PDF row as an `ExtractResult`: one span per output line, offsets
+    into the OUTPUT text (a PDF's source offsets are meaningless after
+    FlateDecode inflation, unlike HTML's D9 source remap); score 1.0 — the
+    decode is deterministic, there is no density confidence to propagate."""
+    text = extract_pdf_text(payload)
+    spans: list[Span] = []
+    off = 0
+    if text:
+        for line in text.split("\n"):
+            spans.append(Span(off, off + len(line), 1.0))
+            off += len(line) + 1
+    return ExtractResult(text, tuple(spans), len(spans))
 
 
 def extract_batch(html: pd.Series) -> pd.DataFrame:
-    """Arrow-batch entry point: Series[bytes] -> DataFrame of outputs.
+    """Arrow-batch entry point: Series[bytes] -> DataFrame of outputs, one
+    row per input row, in input order.  Each row is routed by magic: PDF
+    payloads through `_pdf_result`, everything else through `extract_text`.
 
     Spans come back as three parallel arrays so Spark can zip them JVM-side
     into `array<struct<start,end,score>>` without nested-Arrow round-trips.
@@ -378,7 +362,10 @@ def extract_batch(html: pd.Series) -> pd.DataFrame:
     n_blocks: list[int] = []
     shas: list[str] = []
     for raw in html:
-        res = extract_text(raw)
+        if raw is not None and raw[:5] == PDF_MAGIC:
+            res = _pdf_result(raw)
+        else:
+            res = extract_text(raw)
         texts.append(res.text)
         starts.append([s.start for s in res.spans])
         ends.append([s.end for s in res.spans])

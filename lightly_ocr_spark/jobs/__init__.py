@@ -1,12 +1,13 @@
 """Batch jobs (spark-submit entry points), and the pieces every job shares:
-the url-revisit keeper, the token gate, the leg timer and the atomic
-manifest writer."""
+the url-revisit keeper, the token gate, the leg timer, the local-path
+guard and the atomic manifest writer."""
 
 from __future__ import annotations
 
 import json
 import os
 import time
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -44,6 +45,18 @@ def lap(legs: dict[str, float], name: str, since: float) -> float:
     now = time.time()
     legs[name] = round(now - since, 3)
     return now
+
+
+def require_local_path(path: str) -> None:
+    """Raise `ValueError` if `path` has a URI scheme (`s3a://...`,
+    `file:/...`).  Commit points, manifests and swap backups are handled
+    with `os.path`, which would treat such a path as a cwd-relative
+    directory while Spark writes the data at the URI."""
+    if urlparse(path).scheme:
+        raise ValueError(
+            f"{path!r}: works on local filesystem paths only; pass a "
+            "plain local path, not a URI"
+        )
 
 
 def write_json_atomic(path: str, payload: dict) -> None:

@@ -33,12 +33,11 @@ import json
 import os
 import shutil
 import time
-from urllib.parse import urlparse
 
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from lightly_ocr_spark.jobs import write_json_atomic
+from lightly_ocr_spark.jobs import require_local_path, write_json_atomic
 
 DEFAULT_TARGET_BYTES = 128 << 20
 
@@ -59,11 +58,7 @@ def recover_interrupted_swap(out_dir: str) -> bool:
     Local filesystem only: a path with a URI scheme (`s3a://...`,
     `file:/...`) raises `ValueError` — `os.path` would never see its
     backup, so recovery would be silently skipped."""
-    if urlparse(out_dir).scheme:
-        raise ValueError(
-            f"{out_dir!r}: swap recovery works on local filesystem paths "
-            "only; pass a plain local path, not a URI"
-        )
+    require_local_path(out_dir)
     backup = out_dir.rstrip("/") + ".replaced"
     if not os.path.exists(out_dir) and os.path.exists(backup):
         os.rename(backup, out_dir)

@@ -76,7 +76,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lightly_ocr_spark.jobs import MIN_TOKENS, lap, latest_per_url, n_tokens
+from lightly_ocr_spark.jobs import (
+    MIN_TOKENS,
+    lap,
+    latest_per_url,
+    n_tokens,
+    require_local_path,
+)
 # module global on purpose: the crash-window tests patch `_atomic_json` to
 # fail at each commit point
 from lightly_ocr_spark.jobs import write_json_atomic as _atomic_json
@@ -117,7 +123,9 @@ def process_pages_batch(
     replay under the same batch id with DIFFERENT input fails loudly
     instead of appending fingerprints for documents that were never
     corpus-written.  Returns the batch summary (also persisted as the
-    manifest)."""
+    manifest).  Local filesystem only: an `out_dir` with a URI scheme
+    raises `ValueError`."""
+    require_local_path(out_dir)
     os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
     mpath, fpath = _manifest_paths(out_dir, batch_id)
     if os.path.exists(mpath) and os.path.exists(fpath):

@@ -34,6 +34,7 @@ from lightly_ocr_spark.jobs import (
     lap,
     latest_per_url,
     n_tokens,
+    require_local_path,
     write_json_atomic,
 )
 # NEAR_DUP_MIN_AGREEMENT is re-exported: perfbench/layers.py imports it
@@ -105,9 +106,11 @@ def run_curate(spark: SparkSession, pages_path: str, out_dir: str,
     corpus spills/evicts at 100 TB).  The only persisted frame is `uniq`
     (DISK_ONLY — it feeds two branches: near-dup candidates and the
     anti-join), and its one materialization doubles as the harvest point
-    for the input/extracted counters."""
+    for the input/extracted counters.  Local filesystem only: an `out_dir`
+    with a URI scheme raises `ValueError`."""
     from pyspark.sql import Observation
 
+    require_local_path(out_dir)
     if chunk is not None and not 0 < chunk[1] <= chunk[0]:
         # validate BEFORE the pipeline runs: chunk_docs would raise the
         # same error, but only after hours of curation work at scale

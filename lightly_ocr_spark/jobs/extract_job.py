@@ -8,7 +8,8 @@ a 10^12-row table:
   assignment, so each slice job scans only its own files: no re-read
   amplification).  A slice is the unit of commit, the analog of the
   reference's periodic checkpoint interval (`val_interval`, config.yml:14).
-* **Salting** — within a slice, rows are shuffled by ``xxhash64(url)`` so a
+* **Salting** — within a slice of non-splittable input (WARC, ``.gz``
+  JSONL), or on request, rows are shuffled by ``xxhash64(url)`` so a
   hot host-domain cannot pin a partition (north_rule skew requirement).
   ``xxhash64`` over full urls is near-uniform regardless of the zipf host
   distribution.
@@ -38,11 +39,13 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from lightly_ocr_spark.jobs import write_json_atomic
+from lightly_ocr_spark.jobs import require_local_path, write_json_atomic
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.sources import PAGE_FORMATS, page_files, read_pages
 
 MANIFEST_DIR = "_manifests"
+# slice jobs in flight at once
+CONCURRENT_SLICES = 4
 
 
 def _slice_files(files: list[str], n_slices: int) -> list[list[str]]:
@@ -56,9 +59,7 @@ def run_extract(
     out_dir: str,
     n_slices: int = 8,
     resume: bool = True,
-    salt_partitions: int | None = None,
     salt: bool | None = None,
-    concurrent_slices: int = 4,
     input_format: str = "pages",
 ) -> dict:
     """Run the extraction over all uncommitted slices; return job summary.
@@ -67,25 +68,15 @@ def run_extract(
     interleaves their stages) so per-job barriers — scan tail, shuffle
     boundary, write commit — overlap instead of serializing.  Commit
     semantics are unchanged: each slice's manifest is written only after its
-    own parquet write succeeds."""
+    own parquet write succeeds.  `salt=None` decides per slice from that
+    slice's files; True/False force it on/off.
+
+    Local filesystem only: an `out_dir` with a URI scheme raises
+    `ValueError` (the manifests are written with `os.path`)."""
+    require_local_path(out_dir)
     slices = _slice_files(page_files(pages_path, input_format), n_slices)
     os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
-    if salt_partitions is None:
-        salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if salt is None:
-        # auto: extraction is row-local and parquet input splits are
-        # byte-uniform (maxPartitionBytes), so the salt shuffle buys no
-        # balance there and costs ~21% throughput (BENCH docs_per_sec vs
-        # docs_per_sec_salted).  WARC archives are gzip — NOT splittable —
-        # so one giant archive would otherwise pin one task; keep the
-        # post-parse rebalancing shuffle for that input.  Same for
-        # gzip-compressed JSONL (plain .jsonl splits by line and stays
-        # narrow).  Downstream host-keyed ops (curate's host cap /
-        # near-dup) re-shuffle on their own keys regardless, so they never
-        # depend on this salt.
-        salt = "auto"  # resolved PER SLICE in run_slice: a slice of plain
-        # splittable .jsonl files stays narrow even when another slice in
-        # the same run carries .gz archives
+    salt_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     summary = {"slices": len(slices), "skipped": 0, "run": 0, "rows_out": 0,
                "wall_s": 0.0}
@@ -112,20 +103,24 @@ def run_extract(
         t0 = time.time()
         pages = read_pages(spark, files, input_format)
         # skew salting: spread any hot host across all partitions
-        # (north_rule).  Extraction itself is row-local (input splits are
-        # byte-uniform), so --no-salt skips the shuffle when no downstream
-        # op keys by host/url.  "auto" resolves against THIS slice's
-        # files: WARC always salts (gzip, unsplittable), jsonl only when
-        # the slice actually contains .gz members — a slice of plain
-        # splittable files never pays the ~21% shuffle tax for a .gz that
-        # lives in some other slice.
-        if salt == "auto":
+        # (north_rule).  Extraction is row-local and parquet input splits
+        # are byte-uniform (maxPartitionBytes), so the salt shuffle buys no
+        # balance there and costs ~21% throughput (BENCH docs_per_sec vs
+        # docs_per_sec_salted).  WARC archives are gzip — NOT splittable —
+        # so one giant archive would otherwise pin one task; keep the
+        # post-parse rebalancing shuffle for that input.  Same for
+        # gzip-compressed JSONL, judged on THIS slice's files: plain .jsonl
+        # splits by line and stays narrow even when another slice carries
+        # .gz archives.  Downstream host-keyed ops (curate's host cap /
+        # near-dup) re-shuffle on their own keys regardless, so they never
+        # depend on this salt.
+        if salt is None:
             slice_salt = input_format == "warc" or (
                 input_format == "jsonl"
                 and any(f.endswith(".gz") for f in files)
             )
         else:
-            slice_salt = bool(salt)
+            slice_salt = salt
         salted = (
             pages.repartition(salt_partitions, F.xxhash64("url"))
             if slice_salt else pages
@@ -157,7 +152,7 @@ def run_extract(
         write_json_atomic(manifest_path, manifest)
         return m["rows_out"]
 
-    with ThreadPoolExecutor(max_workers=max(1, concurrent_slices)) as pool:
+    with ThreadPoolExecutor(max_workers=CONCURRENT_SLICES) as pool:
         results = list(pool.map(lambda a: run_slice(*a), enumerate(slices)))
     for r in results:
         if r is None:
@@ -191,6 +186,7 @@ def rollup_manifests(out_dir: str) -> dict:
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
+    require_local_path(out_dir)
     return spark.read.parquet(*sorted(glob.glob(os.path.join(out_dir, "slice=*"))))
 
 
@@ -231,8 +227,6 @@ def main() -> None:
                     help="url-hash rebalancing shuffle before extraction: "
                     "auto (default) salts only non-splittable WARC input; "
                     "parquet scans are already byte-uniform")
-    ap.add_argument("--no-salt", action="store_true",
-                    help="alias for --salt off (back-compat)")
     ap.add_argument("--verify", action="store_true")
     ap.add_argument("--format", choices=tuple(PAGE_FORMATS),
                     default="pages",
@@ -243,14 +237,10 @@ def main() -> None:
     from lightly_ocr_spark.plans.session import build_session
 
     spark = build_session("extract-job", cores=args.cores, python_heavy=True)
-    if args.no_salt and args.salt == "on":
-        ap.error("--no-salt contradicts --salt on; pick one")
-    salt = {"auto": None, "on": True, "off": False}[args.salt]
-    if args.no_salt:
-        salt = False
     summary = run_extract(
         spark, args.pages, args.out, n_slices=args.slices,
-        resume=not args.no_resume, salt=salt,
+        resume=not args.no_resume,
+        salt={"auto": None, "on": True, "off": False}[args.salt],
         input_format=args.format,
     )
     if args.verify:

@@ -10,13 +10,35 @@ the same manifest discipline as the batch job.
 
 from __future__ import annotations
 
-import uuid
+import glob
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lightly_ocr_spark.jobs import write_json_atomic
+from lightly_ocr_spark.jobs import require_local_path, write_json_atomic
 from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.schemas import PAGES_SCHEMA
+from lightly_ocr_spark.streaming import collect_stream
+
+# the rows every extraction stream yields
+EXTRACTED_ROWS = "url string, text string, extract_sha256 string"
+
+
+def extracted_rows(pages: DataFrame) -> DataFrame:
+    """pages stream -> its (url, text, extract_sha256) extraction stream."""
+    return extract_pages(pages).select("url", "text", "extract_sha256")
+
+
+def _pages_stream(
+    spark: SparkSession, pages_dir: str, max_files_per_trigger: int
+) -> DataFrame:
+    """File-source stream over a pages parquet directory."""
+    return (
+        spark.readStream.schema(PAGES_SCHEMA)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .parquet(pages_dir)
+    )
 
 
 def extract_stream(
@@ -24,32 +46,8 @@ def extract_stream(
 ) -> DataFrame:
     """Run the extraction as a file-source stream to completion; returns the
     materialized extracted rows (url, text, extract_sha256)."""
-    stream_pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(pages_dir)
-    )
-    extracted = extract_pages(stream_pages).select(
-        "url", "text", "extract_sha256"
-    )
-    name = "extract_stream_" + uuid.uuid4().hex[:8]
-    q = (
-        extracted.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    try:
-        rows = spark.table(name).collect()
-    finally:
-        spark.catalog.dropTempView(name)
-    return spark.createDataFrame(
-        rows, schema="url string, text string, extract_sha256 string"
-    )
+    pages = _pages_stream(spark, pages_dir, max_files_per_trigger)
+    return collect_stream(spark, extracted_rows(pages), EXTRACTED_ROWS)
 
 
 def extract_stream_job(
@@ -64,27 +62,21 @@ def extract_stream_job(
     Restart semantics come from the checkpoint: a restarted query resumes
     from the last committed offsets, re-processing at most the one epoch
     whose write raced the failure, which the overwrite absorbs.  Run to
-    completion of currently-available files; returns a summary."""
-    import json as _json
-    import os as _os
-
-    stream_pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(pages_dir)
+    completion of currently-available files; returns a summary.  Local
+    filesystem only: an `out_dir` with a URI scheme raises `ValueError`."""
+    require_local_path(out_dir)
+    extracted = extracted_rows(
+        _pages_stream(spark, pages_dir, max_files_per_trigger)
     )
-    extracted = extract_pages(stream_pages).select(
-        "url", "text", "extract_sha256"
-    )
-    manifests_dir = _os.path.join(out_dir, "_manifests")
-    _os.makedirs(manifests_dir, exist_ok=True)
+    manifests_dir = os.path.join(out_dir, "_manifests")
+    os.makedirs(manifests_dir, exist_ok=True)
 
     def write_epoch(df, epoch_id: int) -> None:
-        path = _os.path.join(out_dir, f"epoch={epoch_id}")
+        path = os.path.join(out_dir, f"epoch={epoch_id}")
         df.write.mode("overwrite").parquet(path)
         n = spark.read.parquet(path).count()
         write_json_atomic(
-            _os.path.join(manifests_dir, f"epoch-{epoch_id}.json"),
+            os.path.join(manifests_dir, f"epoch-{epoch_id}.json"),
             {"epoch": int(epoch_id), "rows": int(n)},
         )
 
@@ -97,11 +89,9 @@ def extract_stream_job(
         q.processAllAvailable()
     finally:
         q.stop()
-    import glob as _glob
-
-    manifests = sorted(_glob.glob(_os.path.join(manifests_dir, "epoch-*.json")))
+    manifests = sorted(glob.glob(os.path.join(manifests_dir, "epoch-*.json")))
     total = 0
     for m in manifests:
         with open(m) as f:
-            total += _json.load(f)["rows"]
+            total += json.load(f)["rows"]
     return {"epochs": len(manifests), "rows_out": total}

@@ -8,10 +8,10 @@ batch/stream parity on this operator.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from lightly_ocr_spark.streaming import collect_stream
 
 
 def streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -23,20 +23,5 @@ def streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = "stream_counts_" + uuid.uuid4().hex[:8]
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # materialize before the memory sink is dropped
-    try:
-        rows = spark.table(name).collect()
-    finally:
-        spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema="event_type string, n long")
+    return collect_stream(spark, stream, "event_type string, n long",
+                          output_mode="complete")

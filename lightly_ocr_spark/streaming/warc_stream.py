@@ -13,12 +13,14 @@ overwrite + manifests + checkpoint restart) applies on top.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 
-from lightly_ocr_spark.operators.extract_udf import extract_pages
 from lightly_ocr_spark.sources.warc import explode_archives
+from lightly_ocr_spark.streaming import collect_stream
+from lightly_ocr_spark.streaming.extract_stream import (
+    EXTRACTED_ROWS,
+    extracted_rows,
+)
 
 
 def warc_pages_stream(
@@ -45,30 +47,8 @@ def extract_warc_stream(
     """Run archives -> pages -> extraction as one stream to completion;
     returns the materialized (url, text, extract_sha256) rows.
 
-    DEMO/TEST harness: the memory sink + collect hold the whole result on
-    the driver (the temp view is dropped before returning, so nothing
-    outlives the call).  A production stream pairs `warc_pages_stream`
-    with `extract_stream_job`'s exactly-once foreachBatch sink instead —
-    never a driver-side materialization."""
+    DEMO/TEST harness (see `collect_stream`): a production stream pairs
+    `warc_pages_stream` with `extract_stream_job`'s exactly-once
+    foreachBatch sink instead — never a driver-side materialization."""
     pages = warc_pages_stream(spark, warc_dir, max_files_per_trigger)
-    extracted = extract_pages(pages).select(
-        "url", "text", "extract_sha256"
-    )
-    name = "warc_stream_" + uuid.uuid4().hex[:8]
-    q = (
-        extracted.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    try:
-        rows = spark.table(name).collect()
-    finally:
-        spark.catalog.dropTempView(name)
-    return spark.createDataFrame(
-        rows, schema="url string, text string, extract_sha256 string"
-    )
+    return collect_stream(spark, extracted_rows(pages), EXTRACTED_ROWS)

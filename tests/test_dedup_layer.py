@@ -1,5 +1,8 @@
 """The MinHash dedup layer curate and crawl share: the near-dup clusterer
-and the local-filesystem-only swap recovery in front of every index."""
+and the local-filesystem-only swap recovery in front of every index (and
+the same local-path guard on the extract, curate and crawl outputs)."""
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -95,12 +98,55 @@ def _exact_dedup(spark, path, tmp_path):
     incremental_exact_dedup(spark, batch, path, commit=False)
 
 
-@pytest.mark.parametrize("call", [_recover, _compact, _exact_dedup],
-                         ids=["recover", "compact", "exact_dedup"])
+def _extract(spark, path, tmp_path):
+    from lightly_ocr_spark.jobs.extract_job import run_extract
+
+    run_extract(spark, str(tmp_path / "pages"), path)
+
+
+def _curate(spark, path, tmp_path):
+    from lightly_ocr_spark.jobs.curate_job import run_curate
+
+    run_curate(spark, str(tmp_path / "pages"), path)
+
+
+def _crawl(spark, path, tmp_path):
+    from lightly_ocr_spark.jobs.crawl_job import process_pages_batch
+
+    pages = spark.createDataFrame(
+        [], "url string, warc_ts timestamp, html binary")
+    process_pages_batch(spark, pages, path, str(tmp_path / "fp"), "b0")
+
+
+def _extract_stream(spark, path, tmp_path):
+    from lightly_ocr_spark.streaming.extract_stream import extract_stream_job
+
+    extract_stream_job(spark, str(tmp_path / "pages"), path,
+                       str(tmp_path / "cp"))
+
+
+def _read_extracted(spark, path, tmp_path):
+    from lightly_ocr_spark.jobs.extract_job import read_extracted
+
+    read_extracted(spark, path)
+
+
+@pytest.mark.parametrize(
+    "call",
+    [_recover, _compact, _exact_dedup, _extract, _curate, _crawl,
+     _extract_stream, _read_extracted],
+    ids=["recover", "compact", "exact_dedup", "extract", "curate", "crawl",
+         "extract_stream", "read_extracted"])
 @pytest.mark.parametrize("scheme", ["s3a://bucket", "file:"])
-def test_swap_recovery_rejects_uris(spark, tmp_path, call, scheme):
-    """`os.path` cannot see a `.replaced` backup behind a URI, so swap
-    recovery raises instead of being silently skipped."""
+def test_swap_recovery_rejects_uris(spark, tmp_path, monkeypatch, call,
+                                    scheme):
+    """`os.path` cannot see a `.replaced` backup or a manifest behind a
+    URI, so swap recovery and the job entry points raise instead of
+    skipping recovery or committing into a cwd-relative `file:`/`s3a:`
+    directory while Spark writes the data at the URI."""
+    monkeypatch.chdir(tmp_path)
     path = f"{scheme}{tmp_path}/index"
     with pytest.raises(ValueError, match="local filesystem"):
         call(spark, path, tmp_path)
+    assert not [p for p in os.listdir(tmp_path)
+                if p.startswith(("file:", "s3a:"))]

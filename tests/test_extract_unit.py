@@ -153,32 +153,6 @@ class TestSegmentation:
         assert html[s.start : s.end] == P10
 
 
-class TestSentenceSubspans:
-    """D8 analog: opt-in, lossless, never changes text/spans (poly=False
-    default per net.py:50)."""
-
-    def test_off_by_default(self):
-        assert ex(f"<p>{P10}.</p>").sentence_spans == ()
-
-    def test_lossless_partition(self):
-        from lightly_ocr_spark.functions.extract import extract_text
-
-        html = ("<p>First sentence here with nine words total right now. "
-                "Second one follows! Third asks a question? tail</p>").encode()
-        r = extract_text(html, subspans=True)
-        assert len(r.sentence_spans) == 1
-        seg_text = r.text
-        rebuilt = "".join(seg_text[a:b] for a, b in r.sentence_spans[0])
-        assert rebuilt == seg_text
-        assert len(r.sentence_spans[0]) == 4
-
-    def test_flag_does_not_change_text(self):
-        from lightly_ocr_spark.functions.extract import extract_text
-
-        html = f"<p>{P10}. {P10}!</p>".encode()
-        assert extract_text(html).text == extract_text(html, subspans=True).text
-
-
 class TestRobustness:
     def test_empty_and_none(self):
         assert ex("").text == ""
@@ -222,3 +196,46 @@ class TestExpansionMinWords:
     def test_two_word_header_still_absorbed(self):
         r = ex(f"<h1>tiny head</h1><p>{P10}</p>")
         assert r.text == f"tiny head\n{P10}"
+
+
+class TestBatchRouting:
+    """`extract_batch` routes each row by magic: `%PDF-` payloads through
+    the PDF engine, everything else through the HTML pipeline, and returns
+    one row per input row in input order."""
+
+    def test_interleaved_html_and_pdf_rows(self):
+        import hashlib
+
+        import pandas as pd
+
+        from lightly_ocr_spark.functions.extract import extract_batch
+        from lightly_ocr_spark.functions.pdf import extract_pdf_text
+
+        l1, l2 = "first block of the pdf", "second block"
+        content = f"BT ({l1}) Tj ET BT ({l2}) Tj ET".encode()
+        pdf = (b"%PDF-1.4\n4 0 obj\n<< /Length " + str(len(content)).encode()
+               + b" >>\nstream\n" + content + b"\nendstream\nendobj\n%%EOF\n")
+        rows = [pdf, f"<p>{P10}</p>".encode(), None, pdf[:12],
+                f"<div>{P10} and more words</div>".encode()]
+        out = extract_batch(pd.Series(rows, dtype="object"))
+
+        assert list(out.index) == list(range(len(rows)))
+        for i in (1, 2, 4):
+            res = extract_text(rows[i])
+            assert out["text"][i] == res.text
+            assert out["span_starts"][i] == [s.start for s in res.spans]
+            assert out["span_ends"][i] == [s.end for s in res.spans]
+            assert out["span_scores"][i] == [s.score for s in res.spans]
+            assert out["n_blocks"][i] == res.n_blocks
+        assert out["text"][1] != out["text"][4]
+
+        assert out["text"][0] == extract_pdf_text(pdf) == f"{l1}\n{l2}"
+        assert out["span_starts"][0] == [0, len(l1) + 1]
+        assert out["span_ends"][0] == [len(l1), len(l1) + 1 + len(l2)]
+        assert out["span_scores"][0] == [1.0, 1.0]
+        assert out["n_blocks"][0] == 2
+
+        assert out["text"][3] == ""
+        assert out["span_starts"][3] == [] and out["n_blocks"][3] == 0
+        for text, sha in zip(out["text"], out["extract_sha256"]):
+            assert sha == hashlib.sha256(text.encode()).hexdigest()

@@ -816,12 +816,12 @@ class TestFluency:
     def test_fluency_stage_over_extracted(self, spark, docs):
         from pyspark.sql import functions as F
 
-        from lightly_ocr_spark.operators.fluency import fluency_pages
+        from lightly_ocr_spark.operators.enrich import enrich_pages
 
         d = docs.select(
             F.concat(F.lit("doc://"), "doc_id").alias("url"), "text"
         ).limit(200)
-        out = fluency_pages(d)
+        out = enrich_pages(d)
         rows = out.collect()
         assert len(rows) == 200
         vals = [r["bigram_logp"] for r in rows]
